@@ -43,13 +43,6 @@ object CorpusGen {
     Scale(s"bench$files", entities, entities / 2, files, math.max(200, entities / 40))
   }
 
-  /** benchAt with pathological celebrity skew: 40% of ALL mentions hit
-    * account 0 (vs the 8% every corpus already plants) — the evidence
-    * corpus for AQE skew-join splitting / salted aggregation behavior.
-    */
-  def skewAt(files: Int): Scale =
-    benchAt(files).copy(name = s"skew$files", celebPct = 40)
-
   val Seed: Long = 42L
 
   // ---------------------------------------------------------------- hashing

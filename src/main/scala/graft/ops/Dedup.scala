@@ -186,20 +186,7 @@ object Dedup {
   def candidatePairs(sigs: DataFrame, bucketCap: Int): DataFrame = {
     val sized = sigs.withColumn("bucket_sz",
       count(lit(1)).over(Window.partitionBy(col("band_id"), col("band_hash"))))
-    // localCheckpoint: the self-join consumes this frame on BOTH sides —
-    // without it the whole signature kernel re-runs over the corpus twice.
-    // The frame is tiny (N × bands rows of (id, int, long)).
-    val ok = sized.filter(col("bucket_sz") <= bucketCap)
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
-      .localCheckpoint(true)
-    ok.alias("l")
-      .join(ok.alias("r"),
-        col("l.band_id") === col("r.band_id") &&
-          col("l.band_hash") === col("r.band_hash") &&
-          col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint(true)
+    bucketPairs(sized.filter(col("bucket_sz") <= bucketCap))
   }
 
   /** candidatePairs for LOW-cardinality band domains (the embedding LSH:
@@ -225,8 +212,18 @@ object Dedup {
       .agg(count(lit(1)).as("bucket_sz"))
       .filter(col("bucket_sz") > bucketCap)
       .select(col("band_id"), col("band_hash"))
-    val ok = sigsC.join(hot, Seq("band_id", "band_hash"), "left_anti")
-      .select(col("doc_id"), col("band_id"), col("band_hash"))
+    bucketPairs(sigsC.join(hot, Seq("band_id", "band_hash"), "left_anti"))
+  }
+
+  /** The shared tail of both candidate generators: distinct (doc_a < doc_b)
+    * pairs sharing a (band_id, band_hash) key among the signatures that
+    * survived the bucket cap.
+    */
+  private def bucketPairs(kept: DataFrame): DataFrame = {
+    // localCheckpoint: the self-join consumes this frame on BOTH sides —
+    // without it the whole signature kernel re-runs over the corpus twice.
+    // The frame is tiny (N × bands rows of (id, int, long)).
+    val ok = kept.select(col("doc_id"), col("band_id"), col("band_hash"))
       .localCheckpoint(true)
     ok.alias("l")
       .join(ok.alias("r"),

@@ -1,6 +1,7 @@
 package graft.kg
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -114,6 +115,35 @@ class KgPipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(keyset(r.rollup) == keyset(rebuilt))
     val cutoff = CandidateGen.topK(r.rollup, conf)
     assert(keyset(cutoff) == keyset(r.candidates))
+  }
+
+  test("tiny scale: in-memory and checkpointed policies agree per stage, run() is oracle-exact") {
+    // compute() and run() execute the same stage graph under different
+    // materialization policies — a policy that changed a stage's rows
+    // (e.g. a parquet round-trip or a lost persist) must show here, and
+    // the checkpointed triples must meet the same oracle bar as compute()
+    import spark.implicits._
+    val scale = CorpusGen.Tiny
+    val mem = Pipeline.computeForScale(spark, scale)
+    val root = java.nio.file.Files.createTempDirectory("kg_policies").toString
+    val ckpt = Pipeline.run(spark, scale, root)
+    def rows(df: DataFrame, cols: Array[String]): (Int, Set[Row]) = {
+      val all = df.select(cols.toSeq.map(col): _*).collect()
+      (all.length, all.toSet)
+    }
+    for ((stage, a, b) <- Seq(
+        ("dictionary", mem.dictionary, ckpt.dictionary),
+        ("candidates", mem.candidates, ckpt.candidates),
+        ("alignments", mem.alignments, ckpt.alignments),
+        ("triples", mem.triples, ckpt.triples))) {
+      assert(b.columns.toSet == a.columns.toSet, s"$stage columns")
+      assert(rows(a, a.columns) == rows(b, a.columns), s"$stage rows differ")
+    }
+    val (want, _) = ScalarOracle.run(scale)
+    val got = ckpt.triples.as[Triple].collect().toSet
+    assert(got == want,
+      s"missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
+    mem.unpersist()
   }
 
   test("F20 cross products append pairwise feature products") {
